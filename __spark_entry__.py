@@ -32,6 +32,7 @@ from osm_addr_bot_spark.datapipe import sampling as smp
 from osm_addr_bot_spark.datapipe import similarity as sim
 from osm_addr_bot_spark.datapipe import text as tx
 from osm_addr_bot_spark.geo.haversine import haversine_m, haversine_sql
+from osm_addr_bot_spark.geo.join import radius_join
 from osm_addr_bot_spark.geo.tiles import xyz_tile_cols, xyz_tile_sql
 from osm_addr_bot_spark.operators.dedup import filter_priority
 from osm_addr_bot_spark.operators.parse import parse_elements
@@ -369,45 +370,16 @@ def q_nullsafe_equal_tags(spark, sf_dir):
 def q_duplicate_radius_join(spark, sf_dir):
     # J1 class: the engine runs its hex-cell k-ring join; the oracle
     # brute-forces the cross join — equality proves the cover guarantee.
-    # Each side carries a precomputed cos(lat) so the bbox prefilter
-    # (geo.haversine.radius_prefilter) short-circuits the asin/sqrt
-    # haversine for most same-cell candidate pairs, and there is NO
-    # final distinct: a pair (a, b) can match in exactly one join key —
-    # b's own cell — and the k-ring array has no duplicate cells, so
-    # the join multiplicity is 1 by construction and the old distinct
-    # was a full exchange of the output for nothing (r6: noop
-    # 4.38 s -> 3.31 s combined, same rows — oracle-verified).
-    from osm_addr_bot_spark.geo.haversine import radius_prefilter
-    from osm_addr_bot_spark.geo.hexgrid import cell_expr, cover_k, kring_expr
-
     pts = _cust_points(spark, sf_dir)
-    k = cover_k(100.0, 9)
-    probe = pts.withColumn(
-        "cell", F.explode(kring_expr(cell_expr(F.col("lat"), F.col("lon"), 9), k))
-    ).withColumn("_cl", F.cos(F.radians(F.col("lat"))))
     build = pts.select(
-        cell_expr(F.col("lat"), F.col("lon"), 9).alias("cell"),
-        F.col("c_custkey").alias("k_b"),
-        F.col("lat").alias("lat_b"),
-        F.col("lon").alias("lon_b"),
-        F.cos(F.radians(F.col("lat"))).alias("_cl_b"),
+        F.col("c_custkey").alias("k_b"), F.col("lat").alias("b_lat"), F.col("lon").alias("b_lon")
     )
-    d = haversine_m(F.col("lat"), F.col("lon"), F.col("lat_b"), F.col("lon_b"))
-    return (
-        probe.join(build, "cell")
-        .filter(F.col("c_custkey") < F.col("k_b"))
-        .filter(
-            radius_prefilter(
-                F.col("lat"), F.col("lon"), F.col("lat_b"), F.col("lon_b"),
-                100.0, F.col("_cl"), F.col("_cl_b"),
-            )
-        )
-        .filter(d <= 100.0)
-        .select(
-            F.col("c_custkey").alias("k_a"),
-            "k_b",
-            F.round(d, 2).alias("dist_m"),
-        )
+    return radius_join(pts, build, 100.0, refine=F.col("c_custkey") < F.col("k_b")).select(
+        F.col("c_custkey").alias("k_a"),
+        "k_b",
+        F.round(haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon")), 2).alias(
+            "dist_m"
+        ),
     )
 
 
@@ -429,49 +401,19 @@ def q_street_tier_anti_join(spark, sf_dir):
     # J4 class. The reference's tier escalation (500/1000/3000) exists
     # to keep REMOTE queries cheap; its result equals "no match within
     # the largest tier" (matched@r ⊆ matched@R for r <= R by distance
-    # monotonicity) — the exact equivalence streets.street_names_stage
-    # adopted in r3 and this query's own oracle (one flat NOT EXISTS at
-    # 3000 m) pins. r6 runs ONE max-tier pass here too, and the match
-    # itself is a LEFT SEMI join with the distance refine in the join
-    # condition: the hash join early-exits on the first in-range
-    # supplier per probe row instead of emitting every (probe,
-    # supplier) pair and distinct-ing millions of rows away. The seg
-    # equality rides in the equi-join key and the bbox prefilter runs
-    # before the haversine inside the condition.
-    from osm_addr_bot_spark.geo.haversine import radius_prefilter
-    from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
-
+    # monotonicity) — the equivalence streets.street_names_stage uses
+    # and this query's own oracle (one flat NOT EXISTS at 3000 m) pins.
     cust = _read(spark, sf_dir, "customer").selectExpr(
         "c_custkey", f"{_LAT} AS lat", f"{_LON} AS lon", "c_mktsegment AS seg"
     )
     supp = _read(spark, sf_dir, "supplier").selectExpr(
-        "s_suppkey",
-        "49.5 + (s_suppkey % 37) * 0.0004 AS lat",
-        "14.5 + (s_suppkey % 53) * 0.0006 AS lon",
+        "49.5 + (s_suppkey % 37) * 0.0004 AS b_lat",
+        "14.5 + (s_suppkey % 53) * 0.0006 AS b_lon",
         "CASE WHEN s_suppkey % 2 = 0 THEN 'BUILDING' ELSE 'MACHINERY' END AS seg",
     )
-    radius = 3000.0
-    res = pick_res(radius)
-    probe = with_cover(cust, radius, res, out="cell")
-    idx = supp.select(
-        cell_expr(F.col("lat"), F.col("lon"), res).alias("s_cell"),
-        F.col("seg").alias("s_seg"),
-        F.col("lat").alias("s_lat"),
-        F.col("lon").alias("s_lon"),
-    )
-    cond = (
-        (F.col("cell") == F.col("s_cell"))
-        & (F.col("seg") == F.col("s_seg"))
-        & radius_prefilter(
-            F.col("lat"), F.col("lon"), F.col("s_lat"), F.col("s_lon"), radius
-        )
-        & (
-            haversine_m(F.col("lat"), F.col("lon"), F.col("s_lat"), F.col("s_lon"))
-            <= radius
-        )
-    )
-    matched = probe.join(idx, cond, "left_semi").select("c_custkey").distinct()
-    return cust.join(matched, "c_custkey", "left_anti").select("c_custkey")
+    return radius_join(
+        cust, supp, 3000.0, how="anti", keys=["seg"], probe_key=["c_custkey"]
+    ).select("c_custkey")
 
 
 @_q(

@@ -15,7 +15,7 @@ internalizes those operators as native Spark stages:
 
   * duplicate-address radius join (100 m)  -> hex-cell k-ring hash join
   * place containment / proximity (10 km)  -> cell-cover PIP + radius join
-  * tiered street-name search (0.5/1/3 km) -> anti-join cascade
+  * tiered street-name search (0.5/1/3 km) -> one max-tier anti join
   * historical guilt diff                  -> snapshot join + map diff
   * raster tile assignment                 -> native XYZ slippy-map exprs
 
@@ -24,8 +24,11 @@ analysis, multimodal plumbing) under `datapipe/`.
 
 Design rules (see SURVEY.md):
   - DataFrame/SQL first; Catalyst does pushdown/pruning/join selection.
-  - Python only in vectorized pandas/Arrow UDFs (cell math, PIP refine).
-  - Explicit partitioning: spatial shuffles key on cell ids, skewed
+  - Native expressions throughout the pipeline (cell math, S2 ids,
+    polygon cover, PIP refine); the only Python is the report composer's
+    vectorized pandas UDF.
+  - Every proximity operator is one cell-cover radius join
+    (geo.join.radius_join); spatial shuffles key on cell ids, skewed
     urban cells are salted, small dims are broadcast.
 """
 

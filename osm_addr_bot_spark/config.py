@@ -90,4 +90,5 @@ HEX_LAT0_DEG = 52.0        # equirectangular projection reference latitude
                            # (center of SEARCH_BBOX); cell ids are a pure
                            # function of (lat, lon, res) given this constant
 SALT_BUCKETS = 8           # deterministic salt fan-out for skewed cells
+HOT_CELL_THRESHOLD = 4000  # J1 candidate count above which a cell is salted
 DEFAULT_TILE_ZOOM = 14     # XYZ raster tile zoom for assignment reports

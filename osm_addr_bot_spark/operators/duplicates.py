@@ -19,21 +19,22 @@ duplicate_search.py:21-56 predicate):
   * set semantics on uid across the check's result (overpass.py:239,
     270-272) — here deterministic: min (changeset_id, timestamp) wins
 
-Physical plan: candidates keep their parse-time res-9 hex cell; issues
-explode cell x k-ring-1 (7 cells — proven sufficient for 100 m in
-tests/test_geo.py) x a deterministic salt sequence; candidates carry
-``pmod(hash(uid), k)`` salt. The (cell, salt) equi-join bounds per-task
-fan-in under urban skew; AQE skew-join remains as backstop. Distance +
-tag equality refine after the join, all native exprs.
+Physical plan: one ``geo.join.radius_join`` — issues explode their
+res-9 disk cover (cell + k-ring 1, proven sufficient for 100 m in
+tests/test_geo.py), candidates key on their parse-time res-9 cell, and
+hot cells are salted (``SALT_BUCKETS`` above ``HOT_CELL_THRESHOLD``
+candidates) to bound per-task fan-in under urban skew. Family, uid and
+tag equality refine inside the join ahead of the distance test, all
+native exprs.
 
 Shuffle-width note (r3 event-log audit): the match predicates need only
 (family, lat/lon, the five EQUAL_TAGS values, uid) — so BOTH sides of
-the (cell, salt) exchange ship that slim projection (the probe side is
+the cell exchange ship that slim projection (the probe side is
 replicated 7 x salt ways, so every byte there is multiplied), the join
 emits bare (issue-key, c_uid) links, and the full payloads (tags map,
 bbox, provenance) are re-fetched AFTER matching by one issue-key join
-plus one broadcast-sized uid join against the already-persisted
-elements scan. Matches are bounded by the surviving issue count — a
+plus one broadcast uid join against the already-persisted elements
+scan. Matches are bounded by the surviving issue count — a
 broadcast-sized set by construction, never O(universe).
 """
 
@@ -45,13 +46,13 @@ from pyspark.sql import functions as F
 from osm_addr_bot_spark.config import (
     DUPLICATE_RADIUS_M,
     EQUAL_TAGS,
+    HOT_CELL_THRESHOLD,
     LARGE_ELEMENT_MAX_SIZE,
     SALT_BUCKETS,
     WHITELIST_TAGS,
 )
-from osm_addr_bot_spark.geo import haversine_m
-from osm_addr_bot_spark.geo.haversine import radius_prefilter
-from osm_addr_bot_spark.geo.hexgrid import cover_k, kring_expr
+from osm_addr_bot_spark.geo.hexgrid import pick_res
+from osm_addr_bot_spark.geo.join import radius_join
 
 
 def whitelist_expr(tags: Column) -> Column:
@@ -107,27 +108,15 @@ def duplicates_stage(
     issues: DataFrame,
     elements: DataFrame,
     radius_m: float = DUPLICATE_RADIUS_M,
-    salt_buckets: int = SALT_BUCKETS,
-    hot_cell_threshold: int = 4000,
-    broadcast_refetch: bool = True,
 ) -> DataFrame:
     """Run J1 for the DUPLICATED check's issue rows; returns the check's
-    new issue set in the same long format.
-
-    ``broadcast_refetch``: the payload re-fetch join (matched links x
-    candidate universe) broadcasts the link side — links are bounded by
-    the whitelist-clean issue count, orders of magnitude below the
-    universe. Disable only if a workload's match set outgrows the
-    broadcast budget; the join then shuffles on c_uid with AQE picking
-    the strategy."""
+    new issue set in the same long format."""
     issue_cols = issues.columns
 
     # single fused filters: every extra DataFrame op costs a full
     # driver-side analysis pass over the (large) upstream plan (~40 ms
     # each at the pipeline's tail, measured r6)
     iss = issues.filter(skip_large_expr() & whitelist_expr(F.col("tags")))
-
-    k = cover_k(radius_m, 9)
 
     cand_base = elements.filter(
         F.map_contains_key(F.col("tags"), F.lit("addr:housenumber"))
@@ -142,71 +131,28 @@ def duplicates_stage(
             for i, t in enumerate(EQUAL_TAGS)
         ]
 
-    # Targeted salting: only cells whose candidate count exceeds the
-    # threshold are split into salt buckets (build side) and probed with
-    # all salts (probe side). Cold cells — the overwhelming majority —
-    # keep salt 0 and pay no replication. The hot-cell list is one cheap
-    # aggregate, tiny even at 10^12 rows (bounded by #cells above the
-    # threshold), broadcast into both sides. AQE skew-join stays on as
-    # the backstop for skew this static rule can't see.
-    hot = (
-        cand_base.groupBy(F.col("hex9").alias("_cell"))
-        .count()
-        .filter(F.col("count") > hot_cell_threshold)
-        .select("_cell", F.lit(True).alias("_hot"))
-    )
-
     # ---- slim match phase: only what the predicates read crosses the
-    # (cell, salt) exchange — probe bytes are multiplied by 7 ring cells
-    # x salt fan-out, so the slim projection is the direct attack on the
-    # widest shuffle (r3 DRAM-inflation audit)
-    iss_probe = (
-        iss.select(
-            *_ISSUE_KEY, "element_type", "lat", "lon", "hex9",
-            # one cos per probe row so the bbox prefilter below runs
-            # without trig per candidate pair (8 bytes on the exchange
-            # against skipping the haversine for out-of-box pairs)
-            F.cos(F.radians(F.col("lat"))).alias("_coslat"),
-            *_eq_vals(F.col("tags"), "_eq"),
-        )
-        .withColumn("_cell", F.explode(kring_expr(F.col("hex9"), k)))
-        .drop("hex9")
-        .join(F.broadcast(hot), "_cell", "left")
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_hot"), F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("_hot")
+    # cell exchange — probe bytes are multiplied by 7 ring cells x salt
+    # fan-out, so the slim projection is the direct attack on the widest
+    # shuffle (r3 DRAM-inflation audit)
+    iss_probe = iss.select(
+        *_ISSUE_KEY, "element_type", "lat", "lon", "hex9", *_eq_vals(F.col("tags"), "_eq")
     )
-
-    cand = (
-        cand_base.join(
-            F.broadcast(hot.withColumnRenamed("_cell", "hex9")), "hex9", "left"
-        )
-        .select(
-            F.col("hex9").alias("_cell"),
-            F.when(F.col("_hot"), F.pmod(F.hash(F.col("uid")), F.lit(salt_buckets)))
-            .otherwise(F.lit(0))
-            .alias("_salt"),
-            F.col("uid").alias("c_uid"),
-            # (doc_id, span_offset) ride along so the payload refetch
-            # re-selects EXACTLY the matched candidate rows — uid alone
-            # is not a row key when the same element appears in several
-            # documents, and a repeated uid would otherwise attach rows
-            # that never passed the match predicates (ADVICE r4). Two
-            # ints on the build side, which salting never replicates.
-            F.col("doc_id").alias("c_doc_id"),
-            F.col("span_offset").alias("c_span_offset"),
-            F.col("element_type").alias("c_element_type"),
-            F.col("lat").alias("c_lat"),
-            F.col("lon").alias("c_lon"),
-            F.cos(F.radians(F.col("lat"))).alias("c_coslat"),
-            *_eq_vals(F.col("tags"), "_ceq"),
-        )
+    cand = cand_base.select(
+        F.col("uid").alias("c_uid"),
+        # (doc_id, span_offset) ride along so the payload refetch
+        # re-selects EXACTLY the matched candidate rows — uid alone is
+        # not a row key when the same element appears in several
+        # documents, and a repeated uid would otherwise attach rows that
+        # never passed the match predicates (ADVICE r4). Two ints on the
+        # build side, which salting never replicates.
+        F.col("doc_id").alias("c_doc_id"),
+        F.col("span_offset").alias("c_span_offset"),
+        F.col("element_type").alias("c_element_type"),
+        F.col("lat").alias("b_lat"),
+        F.col("lon").alias("b_lon"),
+        F.col("hex9").alias("c_hex9"),
+        *_eq_vals(F.col("tags"), "_ceq"),
     )
 
     opposite_family = F.when(
@@ -217,28 +163,16 @@ def duplicates_stage(
     for i in range(len(EQUAL_TAGS)):
         eq_quintuple = eq_quintuple & F.col(f"_eq{i}").eqNullSafe(F.col(f"_ceq{i}"))
 
-    # ONE fused refine filter, cheap predicates first (codegen
-    # short-circuits a conjunction left to right): family/uid tests,
-    # then the trig-free bbox prefilter, and only survivors pay the
-    # asin/sqrt haversine and the null-safe quintuple
-    refine = (
-        opposite_family
-        & (F.col("c_uid") != F.col("uid"))
-        & radius_prefilter(
-            F.col("lat"), F.col("lon"), F.col("c_lat"), F.col("c_lon"),
-            float(radius_m), F.col("_coslat"), F.col("c_coslat"),
-        )
-        & (
-            haversine_m(F.col("lat"), F.col("lon"), F.col("c_lat"), F.col("c_lon"))
-            <= F.lit(float(radius_m))
-        )
-        & eq_quintuple
-    )
-    links = (
-        iss_probe.join(cand, ["_cell", "_salt"])
-        .filter(refine)
-        .select(*_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset")
-    )
+    links = radius_join(
+        iss_probe,
+        cand,
+        radius_m,
+        refine=opposite_family & (F.col("c_uid") != F.col("uid")) & eq_quintuple,
+        salt=(SALT_BUCKETS, HOT_CELL_THRESHOLD),
+        # both sides keep their parse-time res-9 cell when it is the
+        # join's resolution
+        cells=("hex9", "c_hex9") if pick_res(radius_m) == 9 else None,
+    ).select(*_ISSUE_KEY, "c_uid", "c_doc_id", "c_span_offset")
 
     # one row per surviving issue carrying its matched candidate row
     # keys — the only aggregate over the (small) link set
@@ -257,16 +191,14 @@ def duplicates_stage(
     # the full row key (uid, doc_id, span_offset) — link side broadcast,
     # so the wide candidate rows never cross an exchange
     prov_cols = [c for c in issue_cols if c not in _CAND_SOURCED]
-    link_prov = iss_hit.select(
-        *prov_cols, F.explode("_dup_keys").alias("_k")
-    ).select(
-        *prov_cols,
-        F.col("_k.c_uid").alias("c_uid"),
-        F.col("_k.c_doc_id").alias("c_doc_id"),
-        F.col("_k.c_span_offset").alias("c_span_offset"),
+    link_prov = F.broadcast(
+        iss_hit.select(*prov_cols, F.explode("_dup_keys").alias("_k")).select(
+            *prov_cols,
+            F.col("_k.c_uid").alias("c_uid"),
+            F.col("_k.c_doc_id").alias("c_doc_id"),
+            F.col("_k.c_span_offset").alias("c_span_offset"),
+        )
     )
-    if broadcast_refetch:
-        link_prov = F.broadcast(link_prov)
     cand_payload = cand_base.select(
         F.col("uid").alias("c_uid"),
         F.col("doc_id").alias("c_doc_id"),

@@ -72,9 +72,8 @@ def parse_elements(
     """Parse kind='text' spans into the canonical elements DataFrame.
 
     All expressions are native (whole-stage codegen) including the hex
-    cell id; the only Python is the vectorized S2-index Arrow UDF, and
-    the index columns are skippable via ``with_index`` for purely
-    relational consumers.
+    and S2 cell ids, and the index columns are skippable via
+    ``with_index`` for purely relational consumers.
     """
     spans = explode_spans(documents).filter(F.col("kind") == "text")
     e = spans.select(

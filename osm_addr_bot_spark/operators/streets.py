@@ -1,4 +1,4 @@
-"""J4 — tiered street-name proximity anti-join cascade.
+"""J4 — street-name proximity search.
 
 Internalizes the reference's ``query_street_names``
 (overpass.py:143-151 compile, 347-382 exec, tier driver 37-55):
@@ -6,17 +6,17 @@ an UNKNOWN_STREET_NAME issue is CLEARED when a named highway within the
 current tier radius (500 -> 1000 -> 3000 m) carries its ``addr:street``
 as ``name`` or ``alt_name`` — EXACT string match, no normalization
 (quirk Q3, overpass.py:379). Issues cleared at a tier leave the
-cascade; the rest escalate; whoever survives tier 3000 stays flagged.
+search; the rest escalate; whoever survives tier 3000 stays flagged.
 Large elements never enter (reference @skip_large).
 
-Physical plan per tier: street polylines pre-explode to vertices and
-name variants, indexed by hex cell at the tier's resolution (built once
-per resolution and reusable across runs — at 100 TB this is a static
-index table). Issues explode their disk-cover cells and equi-join on
-(cell, name) so the shuffle carries only same-named candidates; the
-haversine refine is native. Matched = left_semi, remainder = left_anti
-— the reference's tier() loop as three shrinking anti-joins (P5:
-deliberate driver-side loop, no Catalyst analog).
+The tier escalation exists to keep *remote* queries cheap; its final
+result equals "no matching street within the largest tier" (matched@500
+⊆ matched@3000 by distance monotonicity). Here the (cell, name)
+equi-join already prunes candidates to same-named streets, so the stage
+is ONE ``geo.join.radius_join`` at max(tiers) in anti mode: street
+polylines pre-explode to (vertex, name-variant) rows, issues explode
+their disk cover, and a LEFT SEMI join with the distance test in its
+condition stops at an issue's first in-range vertex.
 
 Distance note: point-to-way distance is approximated by min distance
 to the way's vertices (generator emits 100 m-spaced vertices; fixtures
@@ -29,29 +29,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.config import STREET_TIERS_M
-from osm_addr_bot_spark.geo import haversine_m
-from osm_addr_bot_spark.geo.hexgrid import cell_expr, pick_res, with_cover
+from osm_addr_bot_spark.geo.join import radius_join
 from osm_addr_bot_spark.operators.duplicates import skip_large_expr
 
 _ISSUE_KEY = ["category", "check_id", "changeset_id", "uid"]
 
 
-def street_vertex_index(streets: DataFrame, res: int) -> DataFrame:
-    """(cell, name, v_lat, v_lon): one row per (vertex, name-variant)."""
+def street_vertex_index(streets: DataFrame) -> DataFrame:
+    """(_name, b_lat, b_lon): one row per (vertex, name-variant)."""
     return (
         streets.select(
-            "way_id",
             F.explode(F.array(F.col("name"), F.col("alt_name"))).alias("_name"),
             F.col("points"),
         )
         .filter(F.col("_name").isNotNull())
-        .select("way_id", "_name", F.explode("points").alias("p"))
-        .select(
-            "_name",
-            F.col("p.lat").alias("v_lat"),
-            F.col("p.lon").alias("v_lon"),
-        )
-        .withColumn("_cell", cell_expr(F.col("v_lat"), F.col("v_lon"), res))
+        .select("_name", F.explode("points").alias("p"))
+        .select("_name", F.col("p.lat").alias("b_lat"), F.col("p.lon").alias("b_lon"))
     )
 
 
@@ -59,48 +52,17 @@ def street_names_stage(
     issues: DataFrame,
     streets: DataFrame,
     tiers: tuple[int, ...] = STREET_TIERS_M,
-    cascade: bool = False,
 ) -> DataFrame:
-    """J4: returns the issues still flagged after the search.
-
-    The reference's tier escalation exists to keep *remote* queries
-    cheap; its final result equals "no matching street within the
-    largest tier" (matched@500 ⊆ matched@3000 by monotonicity). In
-    Spark the (cell, name) equi-join already prunes candidates to
-    same-named streets, so the default runs ONE join at max(tiers) —
-    two shuffles instead of six, same rows (equivalence under test).
-    ``cascade=True`` keeps the reference-shaped 3-round anti-join loop
-    (P5) for workloads where tier-1 hits are cheap and dominant.
-    """
-    remaining = issues.filter(skip_large_expr()).withColumn(
-        "_street", F.element_at(F.col("tags"), F.lit("addr:street"))
+    """J4: returns the issues still flagged after the search at
+    max(tiers) — the reference's tier loop has the same result."""
+    probe = issues.filter(skip_large_expr()).withColumn(
+        "_name", F.element_at(F.col("tags"), F.lit("addr:street"))
     )
-    radii = list(tiers) if cascade else [max(tiers)]
-
-    for radius in radii:
-        res = pick_res(radius)
-        index = street_vertex_index(streets, res)
-        # slim probe (r3 shuffle-width audit): the (cell, name) exchange
-        # replicates every probe row once per cover cell, so it ships
-        # only the issue key + point + name — the full issue payload
-        # (tags map, bbox) rejoins via the anti-join below, which was
-        # already keyed on _ISSUE_KEY
-        probe = (
-            remaining.select(*_ISSUE_KEY, "lat", "lon", F.col("_street").alias("_name"))
-            .transform(lambda df: with_cover(df, float(radius), res))
-        )
-        matched = (
-            probe.join(index, ["_cell", "_name"])
-            .filter(
-                haversine_m(F.col("lat"), F.col("lon"), F.col("v_lat"), F.col("v_lon"))
-                <= F.lit(float(radius))
-            )
-            .select(*_ISSUE_KEY)
-        )
-        remaining = remaining.join(matched, _ISSUE_KEY, "left_anti")
-        # NOTE: the reference early-exits when a tier clears everything
-        # (overpass.py:46-47); Spark's lazy plan makes the remaining
-        # tiers no-ops on an empty side automatically (AQE empty-relation
-        # propagation), so no driver-side count is spent here.
-
-    return remaining.drop("_street")
+    return radius_join(
+        probe,
+        street_vertex_index(streets),
+        float(max(tiers)),
+        how="anti",
+        keys=["_name"],
+        probe_key=_ISSUE_KEY,
+    ).drop("_name")

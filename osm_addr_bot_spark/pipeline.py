@@ -68,15 +68,15 @@ def _estimated_scan_partitions(spark: SparkSession, table_path: str) -> int | No
     """Scan-task estimate for a LOCAL parquet dir from file sizes and
     spark.sql.files.maxPartitionBytes (Spark's split rule, ignoring the
     4 MB open-cost packing — fine for a bigger/smaller-than-parallelism
-    decision). None when the path isn't a local directory."""
+    decision). None when the path isn't a local directory. The byte
+    limit is Spark's own parse of the setting, so every size string
+    Spark accepts ("128mb", "1g", plain bytes) works here too."""
     import math
     import os
 
     if not os.path.isdir(table_path):
         return None
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")).lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    mpb = int(raw[:-1]) * units[raw[-1]] if raw[-1] in units else int(raw)
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     sizes = [
         e.stat().st_size
         for e in os.scandir(table_path)

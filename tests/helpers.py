@@ -6,6 +6,7 @@ from osm_addr_bot_spark.geo import hexgrid as hg
 from osm_addr_bot_spark.geo import s2
 
 M_PER_DEG_LAT = 111_194.9
+EARTH_RADIUS_M = 6_371_008.8
 
 ISSUE_SCHEMA = (
     "category string, min_changesets int, check_id string, priority int, critical boolean,"
@@ -22,6 +23,15 @@ def offset(lat, lon, north_m=0.0, east_m=0.0):
         float(lat + north_m / M_PER_DEG_LAT),
         float(lon + east_m / (M_PER_DEG_LAT * np.cos(np.radians(lat)))),
     )
+
+
+def haversine_np(lat1, lon1, lat2, lon2):
+    """Great-circle distance in meters — the numpy oracle of
+    geo.haversine.haversine_m."""
+    p1, p2 = np.radians(lat1), np.radians(lat2)
+    dp, dl = p2 - p1, np.radians(np.asarray(lon2) - lon1)
+    a = np.sin(dp / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2) ** 2
+    return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
 
 
 def mk_issue(

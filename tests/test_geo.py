@@ -11,6 +11,7 @@ from osm_addr_bot_spark.geo import hexgrid as hg
 from osm_addr_bot_spark.geo import s2
 from osm_addr_bot_spark.geo.haversine import haversine_m, haversine_sql
 from osm_addr_bot_spark.geo.tiles import xyz_tile_cols, xyz_tile_ref
+from tests.helpers import haversine_np
 
 
 def test_haversine_known_distance(spark):
@@ -47,14 +48,6 @@ def _rand_points(n, rng):
     return lat, lon
 
 
-def _true_dist_m(lat1, lon1, lat2, lon2):
-    r = 6_371_008.8
-    p1, p2 = np.radians(lat1), np.radians(lat2)
-    dp, dl = p2 - p1, np.radians(lon2 - lon1)
-    a = np.sin(dp / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2) ** 2
-    return 2 * r * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
-
-
 @pytest.mark.parametrize("radius,res", [(100, 9), (500, 8), (1000, 8), (3000, 7), (10000, 6)])
 def test_hex_cover_guarantee(radius, res):
     """Brute force: any pair within `radius` true meters must land with
@@ -68,7 +61,7 @@ def test_hex_cover_guarantee(radius, res):
     brg = rng.uniform(0, 2 * math.pi, n)
     lat2 = lat1 + (d * np.sin(brg)) / 111_194.9
     lon2 = lon1 + (d * np.cos(brg)) / (111_194.9 * np.cos(np.radians(lat1)))
-    true_d = _true_dist_m(lat1, lon1, lat2, lon2)
+    true_d = haversine_np(lat1, lon1, lat2, lon2)
 
     c2 = hg.cell_of(lat2, lon2, res)
     k = hg.cover_k(radius, res)
@@ -86,8 +79,9 @@ def test_hex_kring_counts():
 
 
 def test_hex_cell_udf(spark):
+    """Two points 89 m apart: the Spark column hex cell equals numpy cell_of."""
     df = spark.createDataFrame([(52.0, 21.0), (52.0008, 21.0)], "lat double, lon double")
-    cells = [r["c"] for r in df.select(hg.hex_cell_udf(9)(F.col("lat"), F.col("lon")).alias("c")).collect()]
+    cells = [r["c"] for r in df.select(hg.cell_expr(F.col("lat"), F.col("lon"), 9).alias("c")).collect()]
     expected = hg.cell_of(np.array([52.0, 52.0008]), np.array([21.0, 21.0]), 9)
     assert cells == list(expected)
 

@@ -182,3 +182,25 @@ def test_rescheduled_backlog_merges_next_run(spark, synth_dir, tmp_path):
     ckpt = Checkpoint(str(ck))
     backlog = ckpt.read_rescheduled(spark, start_ts=T0 + WINDOW_S + 10)
     assert backlog is not None and backlog.count() == n_resched
+
+
+def test_scan_estimate_accepts_spark_size_strings(spark, tmp_path):
+    """spark.sql.files.maxPartitionBytes takes any size string Spark
+    parses ("128mb", "1g", plain bytes); the scan estimate must read it
+    as Spark does, not crash on valid values. One sparse 200 MiB file:
+    two 128 MiB splits, one 1 GiB split."""
+    from osm_addr_bot_spark.pipeline import _estimated_scan_partitions
+
+    with open(tmp_path / "part-0.parquet", "wb") as f:
+        f.truncate(200 << 20)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    try:
+        for value, want in (("128mb", 2), ("1g", 1), ("134217728", 2)):
+            spark.conf.set(key, value)
+            assert _estimated_scan_partitions(spark, str(tmp_path)) == want, value
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -3,13 +3,16 @@ at safe margins around every threshold."""
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
+from osm_addr_bot_spark.config import DUPLICATE_RADIUS_M, STREET_TIERS_M
+from osm_addr_bot_spark.geo.join import radius_join
 from osm_addr_bot_spark.operators.duplicates import duplicates_stage
 from osm_addr_bot_spark.operators.guilt import filter_guilty, guilty_changesets
 from osm_addr_bot_spark.operators.place import place_mistype_stage, place_not_in_area_stage
 from osm_addr_bot_spark.operators.streets import street_names_stage
-from tests.helpers import elements_df, issues_df, mk_issue, offset
+from tests.helpers import elements_df, haversine_np, issues_df, mk_issue, offset
 
 LAT, LON = 52.1, 21.1
 ADDR = {"addr:city": "Warszawa", "addr:housenumber": "7", "addr:street": "Polna"}
@@ -335,8 +338,6 @@ def test_guilt_changeset_level(spark):
 def test_duplicates_salting_preserves_results(spark):
     """Row-for-row equality between salted (hot cell forced) and
     unsalted plans — the skew mechanism must not change semantics."""
-    import numpy as np
-
     rng = np.random.default_rng(9)
     rows = []
     # 60 addresses inside one res-9 cell (a 'hot' urban cell)
@@ -348,44 +349,66 @@ def test_duplicates_salting_preserves_results(spark):
             mk_issue(check_id="DUPLICATED", changeset_id=100 + i, element_id=i + 1,
                      element_type=etype, tags=dict(ADDR, building="yes"), lat=la, lon=lo)
         )
-    issues = issues_df(spark, [r for i, r in enumerate(rows) if i % 3 == 0])
-    elements = elements_df(spark, rows)
+    probe = issues_df(spark, [r for i, r in enumerate(rows) if i % 3 == 0]).select(
+        "check_id", "changeset_id", "uid", "timestamp", "lat", "lon"
+    )
+    build = elements_df(spark, rows).select(
+        F.col("uid").alias("c_uid"), F.col("lat").alias("b_lat"), F.col("lon").alias("b_lon")
+    )
 
-    salted = duplicates_stage(issues, elements, salt_buckets=8, hot_cell_threshold=10)
-    plain = duplicates_stage(issues, elements, salt_buckets=1, hot_cell_threshold=10**9)
-    key = lambda r: (r["check_id"], r["changeset_id"], r["uid"], r["timestamp"])
+    salted = radius_join(probe, build, DUPLICATE_RADIUS_M, salt=(8, 10))
+    plain = radius_join(probe, build, DUPLICATE_RADIUS_M)
+    key = lambda r: (r["check_id"], r["changeset_id"], r["uid"], r["timestamp"], r["c_uid"])
     assert sorted(map(key, salted.collect())) == sorted(map(key, plain.collect()))
     assert salted.count() > 0
 
 
-def test_street_cascade_equals_single_join(spark):
-    """cascade=True (reference-shaped tier loop) and the default single
-    max-tier join must produce identical rows."""
-    streets = _streets(
-        spark,
-        [_street_at(400, "Polna"), _street_at(2500, "Leśna"), _street_at(3300, "Ogrodowa", n_pts=1)],
+def test_street_single_join_matches_brute_force(spark):
+    """An issue stays flagged iff no vertex whose name or alt_name
+    equals its addr:street lies within max(tiers), by numpy haversine."""
+    rows = [_street_at(400, "Polna"), _street_at(2500, "Leśna"),
+            _street_at(3300, "Ogrodowa", n_pts=1)]
+    cases = {1: "Polna", 2: "Leśna", 3: "Ogrodowa", 4: "Zmyślona"}
+
+    def near(street):
+        pts = [(p["lat"], p["lon"]) for _, name, alt, ps in rows if street in (name, alt)
+               for p in ps]
+        return any(haversine_np(LAT, LON, la, lo) <= max(STREET_TIERS_M) for la, lo in pts)
+
+    want = {eid for eid, street in cases.items() if not near(street)}
+    out = street_names_stage(
+        issues_df(spark, [_usn(eid, st) for eid, st in cases.items()]), _streets(spark, rows)
     )
-    issues = issues_df(
-        spark, [_usn(1, "Polna"), _usn(2, "Leśna"), _usn(3, "Ogrodowa"), _usn(4, "Zmyślona")]
-    )
-    single = street_names_stage(issues, streets)
-    casc = street_names_stage(issues, streets, cascade=True)
-    key = lambda r: (r["check_id"], r["changeset_id"], r["uid"])
-    assert sorted(map(key, single.collect())) == sorted(map(key, casc.collect()))
+    assert {r["element_id"] for r in out.collect()} == want == {3, 4}
 
 
 def test_spatial_plans_have_no_python(spark):
-    """Scale guard: the spatial joins must stay whole-stage-codegen
+    """Scale guard: the spatial joins J1-J4 must stay whole-stage-codegen
     JVM-native — no row-at-a-time or Arrow Python eval in the plan
-    (BENCH.md 'hot paths are native')."""
+    (BENCH.md 'hot paths are native') — and the J2/J4 existence tests
+    must be a LEFT SEMI join with the distance test in its condition,
+    which stops at a probe row's first match."""
     issue = mk_issue(check_id="DUPLICATED", changeset_id=1, element_id=1,
-                     tags=dict(ADDR), lat=LAT, lon=LON)
+                     tags=dict(ADDR, **{"addr:place": "Wola"}), lat=LAT, lon=LON)
     cand = mk_issue(changeset_id=2, element_id=2, element_type="way",
                     tags=dict(ADDR), lat=LAT, lon=LON)
-    plan = duplicates_stage(
-        issues_df(spark, [issue]), elements_df(spark, [issue, cand])
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    issues = issues_df(spark, [issue])
+    polys = _polygons(spark, [(1, "Wola", None, None, _poly_ring(LAT, LON, 3000))])
+    place_nodes = spark.createDataFrame(
+        [(1, "Wola", LAT, LON)], "node_id long, name string, lat double, lon double"
+    )
+    stages = {
+        "J1": duplicates_stage(issues, elements_df(spark, [issue, cand])),
+        "J2": place_not_in_area_stage(issues, polys, place_nodes),
+        "J3": place_mistype_stage(issues, polys),
+        "J4": street_names_stage(issues, _streets(spark, [_street_at(400, "Polna")])),
+    }
+    for name, df in stages.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+        if name in ("J2", "J4"):
+            semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
+            assert any("ASIN" in ln.upper() for ln in semi), (name, semi)
 
 
 def test_guilt_strategies_equivalent(spark):
