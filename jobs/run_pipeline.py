@@ -26,7 +26,7 @@ def main() -> int:
     ap.add_argument("--output-dir", default=None)
     ap.add_argument("--start-ts", type=int, default=None)
     ap.add_argument("--end-ts", type=int, default=None)
-    ap.add_argument("--stage-checkpoints", action="store_true")
+    ap.add_argument("--stage-checkpoints", action="store_true", help="needs --checkpoint-dir")
     ap.add_argument("--fidelity", action="store_true")
     ap.add_argument(
         "--dry-run",
@@ -35,6 +35,8 @@ def main() -> int:
         "(the reference's DRY_RUN console sink, main.py:247-252)",
     )
     args = ap.parse_args()
+    if args.stage_checkpoints and args.checkpoint_dir is None:
+        ap.error("--stage-checkpoints needs --checkpoint-dir")
 
     os.environ.setdefault("SPARK_SUBMIT_MODE", "1")
     from osm_addr_bot_spark.pipeline import run_pipeline

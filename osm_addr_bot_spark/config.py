@@ -4,6 +4,8 @@ Every value cites its origin in /root/reference/config.py (or the module
 that hard-codes it) so the judge can check parity.
 """
 
+from pyspark.storagelevel import StorageLevel
+
 # reference config.py:12-28 — editors whose changesets are never discussed
 APP_BLACKLIST = (
     "StreetComplete",
@@ -92,3 +94,9 @@ HEX_LAT0_DEG = 52.0        # equirectangular projection reference latitude
 SALT_BUCKETS = 8           # deterministic salt fan-out for skewed cells
 HOT_CELL_THRESHOLD = 4000  # J1 candidate count above which a cell is salted
 DEFAULT_TILE_ZOOM = 14     # XYZ raster tile zoom for assignment reports
+
+# How an in-memory pipeline run keeps its stage frames
+# (state.checkpoint.StageRunner). Deserialized MEMORY_AND_DISK rows of
+# map-typed tags create heavy GC pressure at millions of rows; DISK_ONLY
+# against a fast local dir (tmpfs/NVMe) is GC-free and measured faster.
+PERSIST_LEVEL = StorageLevel.DISK_ONLY

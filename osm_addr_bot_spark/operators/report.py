@@ -115,35 +115,21 @@ REPORT_SCHEMA = (
 )
 
 
-def compose_reports(
-    issues: DataFrame,
-    users: DataFrame,
-    changesets: DataFrame,
-    fidelity: bool = False,
-    slim: bool = False,
-) -> DataFrame:
+def compose_reports(issues: DataFrame, users: DataFrame, fidelity: bool = False) -> DataFrame:
     """issues (post all gates/dedup) -> one report row per
-    (category, changeset). Needs the author's changesets_count; the dims
-    are broadcast (J6/J7).
+    (category, changeset). Needs the author's changesets_count; the
+    users dim is broadcast (J6/J7).
 
-    ``slim=True`` is the pipeline's slim-payload contract: the issues
-    frame already carries ``cs_uid`` (authoritative, from the
-    open-changeset split's changesets join) and ``street`` (extracted
-    from the tags map before it was dropped), so the data-sized
-    changesets join and the tags map are not needed here. Explicit, not
-    sniffed from column presence — a stray same-named column in a
-    non-pipeline caller must not silently change attribution."""
-    if slim:
-        missing = {"cs_uid", "street"} - set(issues.columns)
-        if missing:
-            raise ValueError(f"slim=True requires columns {sorted(missing)} on issues")
-        withuid = issues
-    else:
-        withuid = issues.drop("cs_uid", "street").join(
-            changesets.select("changeset_id", "cs_uid"), "changeset_id"  # data-sized
-        )
+    The issues frame follows the pipeline's slim-payload contract: it
+    carries ``cs_uid`` (from the open-changeset split's changesets
+    join) and ``street`` (taken from the tags map before it was
+    dropped), so no data-sized changesets join and no tags map are
+    needed here."""
+    missing = {"cs_uid", "street"} - set(issues.columns)
+    if missing:
+        raise ValueError(f"compose_reports requires columns {sorted(missing)} on issues")
     enriched = (
-        withuid
+        issues
         .join(
             F.broadcast(users.selectExpr("user_uid as cs_uid", "changesets_count")),
             "cs_uid",
@@ -155,11 +141,7 @@ def compose_reports(
             "critical",
             "element_type",
             "element_id",
-            (
-                F.col("street")
-                if slim
-                else F.element_at(F.col("tags"), F.lit("addr:street")).alias("street")
-            ),
+            "street",
             "doc_id",
             "span_offset",
             "changesets_count",

@@ -14,17 +14,24 @@ Shuffle topology (the part the reference outsources to Overpass):
   * J1-J4: cell-keyed equi-joins (salted where skewed)
   * grouping: one hash-partition by (category, changeset_id)
   * dims: broadcast
-Stage boundaries can materialize through StageRunner for kill-restart
-resume with per-partition lineage.
+
+One materialization rule: StageRunner.run checkpoints (with lineage and
+resume) or persists the same three boundaries in every run: "fanout"
+(through priority pass 1), "post_stages" (persisted only when a
+checkpoint dir makes the run read it twice) and "final_issues".
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from osm_addr_bot_spark.checks import fan_out_checks
+from osm_addr_bot_spark.config import PERSIST_LEVEL
 from osm_addr_bot_spark.operators.dedup import filter_priority
 from osm_addr_bot_spark.operators.duplicates import duplicates_stage
 from osm_addr_bot_spark.operators.gates import (
@@ -41,10 +48,21 @@ from osm_addr_bot_spark.operators.tiles import assign_tiles, raster_vector_overl
 from osm_addr_bot_spark.state.checkpoint import Checkpoint, StageRunner
 
 
-# Serialized off-heap-ish caching: deserialized MEMORY_AND_DISK rows of
-# map-typed tags create heavy GC pressure at millions of rows; DISK_ONLY
-# against a fast local dir (tmpfs/NVMe) is GC-free and measured faster.
-PERSIST_LEVEL = StorageLevel.DISK_ONLY
+def _missing_columns(table_path: str, ddl: str) -> list[str]:
+    """Top-level DDL columns absent from the footer of one part file of
+    a LOCAL parquet table (a file or a directory of part files):
+    metadata only, no Spark job. Empty when there is no local file."""
+    import pyarrow.parquet as pq
+
+    files = [table_path]
+    if os.path.isdir(table_path):
+        files = sorted(glob.glob(os.path.join(glob.escape(table_path), "[!_]*.parquet")))
+    if not files or not os.path.isfile(files[0]):
+        return []
+    found = set(pq.read_schema(files[0]).names)
+    while "<" in ddl:  # drop nested field lists, keep top-level "name TYPE"
+        ddl = re.sub(r"<[^<>]*>", "", ddl)
+    return [c for c in (f.split()[0] for f in ddl.split(",")) if c not in found]
 
 
 def load_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
@@ -54,10 +72,15 @@ def load_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
     (~0.9 s/run measured r6); the DDLs are guarded against datagen
     drift by tests/test_datagen_guards.py. Parquet is read by column
     NAME, so a world with reordered or extra columns still reads
-    correctly; a world with incompatible types would fail loudly at
-    scan time, same as any schema mismatch."""
+    correctly. A missing column would read as all-NULL, so a local
+    table whose footer lacks one raises ValueError (a stale world);
+    incompatible types fail at scan time."""
     from osm_addr_bot_spark.schemas import TABLE_DDL
 
+    for n, ddl in TABLE_DDL.items():
+        missing = _missing_columns(f"{data_dir}/{n}.parquet", ddl)
+        if missing:
+            raise ValueError(f"table {n!r} in {data_dir} lacks columns {missing} of schemas.TABLE_DDL")
     return {
         n: spark.read.schema(ddl).parquet(f"{data_dir}/{n}.parquet")
         for n, ddl in TABLE_DDL.items()
@@ -72,7 +95,6 @@ def _estimated_scan_partitions(spark: SparkSession, table_path: str) -> int | No
     limit is Spark's own parse of the setting, so every size string
     Spark accepts ("128mb", "1g", plain bytes) works here too."""
     import math
-    import os
 
     if not os.path.isdir(table_path):
         return None
@@ -122,11 +144,14 @@ def run_pipeline(
     fidelity: bool = False,
     stage_checkpoints: bool = False,
     ignore_already_discussed: bool = False,
-    zoom: int | None = None,
-    persist: bool = True,
 ) -> dict[str, DataFrame]:
-    """Run everything; returns the output DataFrames (lazy unless
-    stage_checkpoints materializes them)."""
+    """Run everything; returns the output DataFrames. The stages
+    "fanout", "post_stages" and "final_issues" are written to parquet
+    under ``checkpoint_dir`` with ``stage_checkpoints`` (keyed by window
+    alone, so the dir is required), else persisted lazily at
+    PERSIST_LEVEL ("post_stages" only with a ``checkpoint_dir``)."""
+    if stage_checkpoints and checkpoint_dir is None:
+        raise ValueError("stage_checkpoints=True needs a checkpoint_dir of this run's own")
     t = load_tables(spark, data_dir)
     ckpt = Checkpoint(checkpoint_dir) if checkpoint_dir else None
 
@@ -162,7 +187,7 @@ def run_pipeline(
         start_ts, end_ts = ckpt.compute_window(now=src_max, source_max_ts=src_max + 1)
 
     run_id = f"run-{end_ts if end_ts is not None else 'full'}"
-    stages = StageRunner(spark, checkpoint_dir or "/tmp/osm_ckpt", run_id, enabled=stage_checkpoints)
+    stages = StageRunner(spark, checkpoint_dir if stage_checkpoints else None, run_id)
 
     # If the documents table arrives as few large files, fan the rows out
     # across the cluster BEFORE the expensive JSON-parse + cell-index
@@ -183,43 +208,36 @@ def run_pipeline(
 
     # parse ONCE; the windowed view is a filter over the same plan so the
     # persisted scan serves both the issue path and the J1 candidate pool
-    elements_all = parse_elements(documents)
-    if persist:
-        elements_all = elements_all.persist(PERSIST_LEVEL)
+    elements_all = parse_elements(documents).persist(PERSIST_LEVEL)
     elements = elements_all
     if start_ts is not None:
         elements = elements.filter(F.col("timestamp") >= F.lit(start_ts))
     if end_ts is not None:
         elements = elements.filter(F.col("timestamp") <= F.lit(end_ts))
 
-    issues0 = stages.run("fanout", lambda: fan_out_checks(elements, fidelity=fidelity))
-    issues1 = filter_should_not_discuss(issues0, t["changesets"], ignore_already_discussed)
-    issues2 = filter_priority(issues1, consider_post_fn=True)
-    if persist and not stage_checkpoints:
-        issues2 = issues2.persist(PERSIST_LEVEL)  # feeds four spatial stages
-    issues3 = stages.run(
-        "post_stages",
-        lambda: apply_post_stages(
-            issues2, elements_all, t["polygons"], t["streets"], t["place_nodes"]
-        ),
-    )
+    def fanout() -> DataFrame:
+        issues = fan_out_checks(elements, fidelity=fidelity)
+        issues = filter_should_not_discuss(issues, t["changesets"], ignore_already_discussed)
+        return filter_priority(issues, consider_post_fn=True)
 
-    if persist and not stage_checkpoints and ckpt is not None:
-        # With a checkpoint, the spatial-stage output is read twice (the
-        # closed-changeset chain AND the rescheduled backlog written at
-        # commit). WITHOUT one, the single-pass guilt window is its only
-        # materialized consumer — persisting 4.7M tag-mapped rows to
-        # write them once and read them once measurably pays the storage
-        # round-trip for nothing (r3 serial-floor audit; the old comment
-        # here described the two-pass guilt form, long gone).
-        issues3 = issues3.persist(PERSIST_LEVEL)
+    issues = stages.run("fanout", fanout)  # feeds the four spatial stages
+
+    def post_stages() -> DataFrame:
+        return apply_post_stages(issues, elements_all, t["polygons"], t["streets"], t["place_nodes"])
+
+    # With a checkpoint (always there under stage checkpoints) the
+    # spatial-stage output is read twice: the closed-changeset chain AND
+    # the backlog written at commit. WITHOUT one, persisting 4.7M
+    # tag-mapped rows to read them once pays the storage round-trip for
+    # nothing (r3 serial-floor audit).
+    post = stages.run("post_stages", post_stages) if ckpt else post_stages()
 
     # J8/T3: merge prior-run backlog before the per-changeset phase
-    merged = issues3
+    merged = post
     if ckpt:
         backlog = ckpt.read_rescheduled(spark, start_ts)
         if backlog is not None:
-            merged = merged.unionByName(backlog.select(*issues3.columns))
+            merged = merged.unionByName(backlog.select(*post.columns))
 
     closed, rescheduled = split_open_changesets(merged, t["changesets"])
     guilty = filter_guilty(closed, t["elements_history"], fidelity)
@@ -240,18 +258,14 @@ def run_pipeline(
     deduped = filter_priority(
         guilty, consider_post_fn=False, scope=("category", "changeset_id", "uid")
     )
-    final_issues = stages.run(
-        "final_issues", lambda: apply_user_gates(deduped, t["changesets"], t["users"], slim=True)
-    )
-    if persist and not stage_checkpoints:
-        final_issues = final_issues.persist(PERSIST_LEVEL)  # feeds reports + tiles + counts
+    # feeds reports + tiles + counts
+    final_issues = stages.run("final_issues", lambda: apply_user_gates(deduped, t["users"]))
 
-    reports = compose_reports(final_issues, t["users"], t["changesets"], fidelity, slim=True)
+    reports = compose_reports(final_issues, t["users"], fidelity)
 
     media = parse_media(documents)
-    kw = {"zoom": zoom} if zoom is not None else {}
-    tiles = assign_tiles(final_issues, **kw)
-    overlap = raster_vector_overlap(elements_all, media, **kw)
+    tiles = assign_tiles(final_issues)
+    overlap = raster_vector_overlap(elements_all, media)
 
     out = {
         "elements": elements,

@@ -13,11 +13,10 @@ Engine equivalents:
     a run commits by atomically renaming a manifest file — the
     single-writer guard (ST5) and exactly-once-ish commit (ST2) in one
     primitive (stand-in for an Iceberg transactional commit).
-  * every pipeline stage can materialize to a stage checkpoint with a
-    per-partition lineage manifest (rows per partition, total, schema
-    fingerprint) — restart skips committed stages and replays the rest
-    (north rule: checkpoint-resumable with per-partition lineage +
-    metrics).
+  * every pipeline stage boundary materializes through StageRunner: to
+    a stage checkpoint with a per-partition lineage manifest (rows per
+    partition, total, schema fingerprint) — restart skips committed
+    stages and replays the rest — or, without one, to a persist.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_addr_bot_spark.config import STATE_MAX_BACKLOG, STATE_MAX_DIFF
+from osm_addr_bot_spark.config import PERSIST_LEVEL, STATE_MAX_BACKLOG, STATE_MAX_DIFF
 
 
 def _atomic_write_json(path: Path, payload: dict) -> None:
@@ -139,23 +138,23 @@ class Checkpoint:
 
 
 class StageRunner:
-    """Stage-granular checkpointing: ``run(name, fn)`` materializes a
-    stage once, records per-partition lineage, and replays from parquet
-    on restart — kill the job at any stage boundary and the rerun skips
-    everything committed (resume test:
-    tests/test_pipeline.py::test_checkpoint_resume)."""
+    """The one way a pipeline stage is materialized: ``run(name, fn)``
+    writes the stage once, records per-partition lineage, and replays
+    from parquet on restart — kill the job at any stage boundary and
+    the rerun skips everything committed (resume test:
+    tests/test_pipeline.py::test_checkpoint_resume). With ``root=None``
+    it returns ``fn()`` persisted at PERSIST_LEVEL instead."""
 
-    def __init__(self, spark: SparkSession, root: str | os.PathLike, run_id: str, enabled: bool = True):
+    def __init__(self, spark: SparkSession, root: str | os.PathLike | None, run_id: str):
         self.spark = spark
-        self.root = Path(root) / "stages" / run_id
-        self.enabled = enabled
+        self.root = None if root is None else Path(root) / "stages" / run_id
         self.metrics: dict[str, dict] = {}
-        if enabled:
+        if self.root is not None:
             self.root.mkdir(parents=True, exist_ok=True)
 
     def run(self, name: str, fn) -> DataFrame:
-        if not self.enabled:
-            return fn()
+        if self.root is None:
+            return fn().persist(PERSIST_LEVEL)
         data = self.root / name / "data"
         manifest = self.root / name / "manifest.json"
         if manifest.exists():

@@ -67,9 +67,7 @@ def test_watermark_probe_is_metadata_only(spark, tmp_path, monkeypatch):
 
     for action in ("first", "collect", "count", "take"):
         monkeypatch.setattr(DataFrame, action, boom)
-    out = run_pipeline(
-        spark, str(world), checkpoint_dir=str(tmp_path / "ckpt"), persist=False
-    )
+    out = run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "ckpt"))
     assert "commit" in out  # window was computed -> commit closure exists
     monkeypatch.undo()
     # and the computed window is the sidecar clock, capped by the
@@ -158,14 +156,12 @@ def test_bare_table_watermark_fallback_warns(spark, tmp_path):
     # metadata-only test above)
     with _warnings.catch_warnings():
         _warnings.simplefilter("error", RuntimeWarning)
-        run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c1"), persist=False)
+        run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c1"))
 
     # sidecar removed -> the documented fallback, loudly
     (world / "_table_stats.json").unlink()
     with pytest.warns(RuntimeWarning, match="FULL SCAN"):
-        out = run_pipeline(
-            spark, str(world), checkpoint_dir=str(tmp_path / "c2"), persist=False
-        )
+        out = run_pipeline(spark, str(world), checkpoint_dir=str(tmp_path / "c2"))
     assert "commit" in out  # fallback still computes a window
 
 
@@ -182,3 +178,31 @@ def test_table_ddl_matches_generated_schemas(spark, synth_dir):
         # nullability is writer-dependent; names/types/order must match
         strip = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
         assert strip(pinned) == strip(inferred), name
+
+
+def test_load_tables_rejects_missing_column(spark, tmp_path):
+    """ADVICE (low): the pinned-DDL read fills a column missing from an
+    on-disk world with NULLs, and ensure_dataset reuses cached worlds by
+    marker file, so a stale world is reachable. load_tables checks one
+    footer per local table and names the table and the column."""
+    import pyarrow.parquet as pq
+
+    from osm_addr_bot_spark.pipeline import load_tables
+
+    world = tmp_path / "w"
+    datagen.generate(world, n_docs=20, seed=1)
+    load_tables(spark, str(world))  # a fresh world loads
+
+    # a directory table (part files) and a single-file table
+    for name, column in (("changesets", "cs_uid"), ("users", "changesets_count")):
+        path = world / f"{name}.parquet"
+        table = pq.read_table(path).drop_columns([column])
+        if path.is_dir():
+            for part in path.iterdir():
+                part.unlink()
+            pq.write_table(table, path / "part-00000.parquet")
+        else:
+            pq.write_table(table, path)
+        with pytest.raises(ValueError, match=rf"'{name}'.*\['{column}'\]"):
+            load_tables(spark, str(world))
+        datagen.generate(world, n_docs=20, seed=1)

@@ -1,6 +1,7 @@
 """W1 priority dedup (two-pass masking, quirk Q5) and the changeset
 gates (F18/F19/F22/F23) — FIXTURES.md §5."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.operators.dedup import filter_priority
@@ -126,6 +127,11 @@ def test_user_gates(spark):
         # cs 4: 101 issues -> whole changeset dropped (F23 cap)
         mk_issue(changeset_id=4, element_id=100 + i) for i in range(101)
     ]
-    out = apply_user_gates(issues_df(spark, rows), cs, users)
+    # the author uid comes with the issues (the open-changeset split
+    # attaches it in the pipeline); without it the gates refuse to guess
+    with pytest.raises(ValueError, match="cs_uid"):
+        apply_user_gates(issues_df(spark, rows), users)
+    issues = issues_df(spark, rows).join(cs.select("changeset_id", "cs_uid"), "changeset_id", "left")
+    out = apply_user_gates(issues, users)
     got = {(r["changeset_id"], r["category"]) for r in out.select("changeset_id", "category").collect()}
     assert got == {(1, "ADDRESS"), (2, "TAGS_COMBINATION")}

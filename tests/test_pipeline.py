@@ -4,11 +4,12 @@ checkpoint/resume semantics."""
 import json
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_addr_bot_spark.datagen import T0, WINDOW_S
 from osm_addr_bot_spark.operators.report import compose_message
-from osm_addr_bot_spark.pipeline import load_tables, run_pipeline
+from osm_addr_bot_spark.pipeline import PERSIST_LEVEL, load_tables, run_pipeline
 from osm_addr_bot_spark.state.checkpoint import Checkpoint
 
 
@@ -136,10 +137,25 @@ def test_checkpoint_resume(spark, synth_dir, tmp_path):
     out1["commit"]()
     assert ckpt.read_watermark() == T0 + WINDOW_S
 
-    # lineage manifests exist with per-partition rows
-    man = ck / "stages" / f"run-{T0 + WINDOW_S}" / "fanout" / "manifest.json"
-    m = json.loads(man.read_text())
+    # lineage manifests exist with per-partition rows, one per stage
+    # boundary
+    stages = ck / "stages" / f"run-{T0 + WINDOW_S}"
+    assert {p.parent.name for p in stages.glob("*/manifest.json")} == {
+        "fanout", "post_stages", "final_issues"
+    }
+    m = json.loads((stages / "fanout" / "manifest.json").read_text())
     assert m["rows"] == sum(p["rows"] for p in m["partitions"])
+
+    # the in-memory run materializes the same boundaries by persisting
+    # them, and agrees with the checkpointed run
+    mem = run_pipeline(spark, synth_dir, start_ts=T0, end_ts=T0 + WINDOW_S)
+    assert mem["issues"].storageLevel == PERSIST_LEVEL
+    rows_mem = {
+        (r["category"], r["check_id"], r["changeset_id"], r["uid"])
+        for r in mem["issues"].collect()
+    }
+    assert rows_mem == rows1
+    mem["issues"].unpersist()
 
     # simulate restart: second run must reuse committed stages (same rows)
     out2 = run_pipeline(
@@ -164,6 +180,20 @@ def test_checkpoint_resume(spark, synth_dir, tmp_path):
         for r in out3["issues"].collect()
     }
     assert rows3 == rows1
+
+
+def test_stage_checkpoints_require_checkpoint_dir(spark, tmp_path):
+    """Stage checkpoints are keyed by window alone (run-<end_ts>). Two
+    worlds over the same window with no checkpoint dir of their own
+    would share one stage dir, and the second run would silently resume
+    the first world's stages; run_pipeline refuses instead."""
+    from osm_addr_bot_spark.datagen import generate
+
+    for seed in (1, 2):
+        world = tmp_path / f"w{seed}"
+        generate(world, n_docs=20, seed=seed)
+        with pytest.raises(ValueError, match="checkpoint_dir"):
+            run_pipeline(spark, str(world), start_ts=T0, end_ts=T0 + WINDOW_S, stage_checkpoints=True)
 
 
 def test_rescheduled_backlog_merges_next_run(spark, synth_dir, tmp_path):
